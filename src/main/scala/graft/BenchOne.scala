@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused timing for one or more queries (comma-separated):
   * `runMain graft.BenchOne <name>[,<name>…] [sfDir]`.
   * Same session config as Bench; prints best/median/worst of 3 runs each.
@@ -10,16 +8,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
     names.foreach { name =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection utility: `runMain graft.Explain <query> [sfDir]` prints
   * the formatted physical plan the bench session would execute — the
   * fast check that filters push down, dims broadcast, and aggregates keep
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries(args(0))(spark, sfDir).explain("formatted")
     spark.stop()

@@ -5,7 +5,6 @@ import graft.sources.ConnectorRegistry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Library front door: a SparkSession pre-configured for the engine
-  * (extensions, AQE + skew handling, UTC, sane local shuffle partitions)
   * plus url-based read/write with run-context templating — the surface a
   * user of the reference framework lands on after switching.
   *
@@ -18,19 +17,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
+  /** The one session builder: every main and the test session start here.
+    * `local[cpus]` with one shuffle partition per core, UTC, no UI, and
+    * graft's native expressions and planner rules. AQE and its skew-join
+    * handling are Spark 4.1 defaults, so they are not set.
+    */
+  def builder(cpus: Int): SparkSession.Builder =
     SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+
+  /** A tool main's core count: `SPARK_GRAFT_CPUS` if set, else `default`. */
+  def envCpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+
+  /** Library session: [[builder]] plus zstd parquet and dynamic partition
+    * overwrite for the connector write path.
+    */
+  def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    builder(cpus)
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-  def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    builder(s"local[$cpus]", cpus).config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
 
   def read(spark: SparkSession, urlTemplate: String,
       ctx: RunContext = RunContext()): DataFrame =

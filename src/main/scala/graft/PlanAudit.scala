@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.BarrierLedger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId, Expression, WindowExpression}
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Or}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -251,12 +251,7 @@ object PlanAudit {
       if (rest.isEmpty || rest(0) == "all") SparkEntry.queries.keys.toSeq.sorted
       else rest(0).split(",").toSeq
     val sfDir = if (rest.length > 1) rest(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       try {

@@ -15,28 +15,29 @@ object Tables {
 
   /** Per-(session, dir, table) memo of the ANALYZED read plan. A bare
     * `spark.read.parquet` pays file listing + parquet footer/schema read +
-    * analysis on EVERY call — measured ~70 ms per call (tools.LoadCost),
-    * ~0.2 s per bench query that loads 2–3 tables. Production engines
-    * amortize this through a catalog/metastore; this memo is the same
-    * thing for the fixed testdata layout. It caches PLAN METADATA only —
-    * every action still scans the parquet files — and the testdata dirs
-    * are immutable (TESTDATA.md), so a stale listing cannot occur.
-    * `-Dgraft.tableCache=off` restores the per-call read (A/B, and any
-    * caller that rewrites a dir mid-session).
+    * analysis on EVERY call — measured ~70 ms per call, ~0.2 s per bench
+    * query that loads 2–3 tables. Production engines amortize this through
+    * a catalog/metastore; this memo is the same thing for the fixed
+    * testdata layout. It caches PLAN METADATA only — every action still
+    * scans the parquet files — and the testdata dirs are immutable
+    * (TESTDATA.md), so a stale listing cannot occur.
     */
   private val planMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (sys.props.get("graft.tableCache").contains("off"))
-      loadFresh(spark, dir, name)
-    else
-      planMemo.computeIfAbsent((spark, dir, name), _ => {
-        // Evict dead sessions on the (rare) miss path so long-lived JVMs
-        // that create and stop many sessions don't accumulate their plans.
-        planMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-        loadFresh(spark, dir, name)
-      })
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val key = (spark, dir, name)
+    val hit = planMemo.get(key)
+    if (hit != null) hit
+    else {
+      // Evict dead sessions on the (rare) miss path so long-lived JVMs that
+      // create and stop many sessions don't accumulate their plans. This
+      // runs BEFORE computeIfAbsent: its mapping function must not modify
+      // the map (ConcurrentHashMap contract).
+      planMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
+      planMemo.computeIfAbsent(key, _ => loadFresh(spark, dir, name))
+    }
+  }
 
   private def loadFresh(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir) else

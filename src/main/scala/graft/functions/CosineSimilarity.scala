@@ -9,13 +9,15 @@ import org.apache.spark.sql.types._
   * array columns, with whole-stage codegen.
   *
   * This is the "promote the hot scalar to a codegen'd Expression" path from
-  * SURVEY.md §4: semantically identical to the higher-order-function
-  * formulation in operators.Similarity (same sequential left-to-right
-  * double accumulation, so results are bit-identical and oracle-checkable)
-  * but one fused loop instead of three `aggregate(zip_with(...))`
-  * expression trees — no per-element lambda dispatch, no intermediate
-  * arrays. Registered as SQL function `cosine_similarity` by
-  * [[GraftExtensions]].
+  * SURVEY.md §4: the same sequential left-to-right double accumulation as
+  * a SQL `aggregate(zip_with(...))` left-fold, so results are bit-identical
+  * and oracle-checkable, but one fused loop — no per-element lambda
+  * dispatch, no intermediate arrays. Registered as SQL function
+  * `cosine_similarity` by [[GraftExtensions]].
+  *
+  * Zero-norm input: the result is NaN (0.0 / 0.0), NOT the NULL that a
+  * SQL-level `dot / (sqrt(..) * sqrt(..))` division yields. Callers that
+  * rank by it assume non-zero vectors.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression with VectorBinaryChecks {

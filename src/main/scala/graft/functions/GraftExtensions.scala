@@ -7,10 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Session extensions registering graft's native expressions with the SQL
   * function registry, so plans can use them by name (`expr("...")` /
   * `spark.sql`) and they participate in whole-stage codegen like
-  * built-ins. Activate with:
-  *
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  * built-ins. `GraftSession.builder` activates them; any other session
+  * sets `spark.sql.extensions` to `graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

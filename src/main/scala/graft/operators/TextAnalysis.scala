@@ -1729,56 +1729,36 @@ object TextAnalysis {
     Query.sql(
       "q368_fasttext_classifier",
       (s, dir) => {
-        // Featurization (r14, guide §2.4/§6.2): the label y is a
-        // deterministic per-doc function of the same split(text) the
-        // tokenizer explodes, so it rides the ONE exploded scan as a
-        // groupBy key instead of a second documents scan joined back —
-        // the r13-verdict-flagged "5 documents scans across plan
-        // sections" drop to 1 (both xf branches consume the same
-        // (doc_id, y, b) exchange via ReuseExchange; every doc has ≥ 1
-        // token — split of an empty text yields [""] — so the per-doc
-        // bias branch loses nobody). -Dgraft.ftFuse=off restores the
-        // tf ⋈ yd shape for A/B.
-        val xf = (if (!sys.props.get("graft.ftFuse").contains("off")) {
-          val base = docs(s, dir)
-            .select(col("doc_id"),
-              expr("CAST(CASE WHEN size(filter(split(text, ' '), " +
-                "w -> w IN ('spark', 'query', 'join'))) >= 3 " +
-                "THEN 1 ELSE -1 END AS BIGINT)").as("y"),
-              explode(split(col("text"), " ")).as("tok"))
-            .select(col("doc_id"), col("y"),
-              expr("CAST(conv(substring(md5(concat('fh:', tok)), 1, 6), 16, " +
-                "10) AS BIGINT) % 64").as("b"),
-              expr("CASE WHEN CAST(conv(substring(md5(concat('sg:', tok)), 1," +
-                " 1), 16, 10) AS BIGINT) % 2 = 0 THEN CAST(1 AS BIGINT)" +
-                " ELSE CAST(-1 AS BIGINT) END").as("sg"))
-          val grouped = base.groupBy("doc_id", "y", "b")
-            .agg(sum(col("sg")).as("phi"))
-          grouped.filter(col("phi") =!= 0)
-            .select(col("doc_id"), col("b"), col("phi"), col("y"))
-            .unionByName(grouped.select("doc_id", "y").distinct()
-              .select(col("doc_id"), lit(64L).as("b"),
-                lit(1L).as("phi"), col("y")))
-        } else {
-          val tf = docs(s, dir)
-            .select(col("doc_id"), col("lang"),
-              explode(split(col("text"), " ")).as("tok"))
-            .select(col("doc_id"), col("lang"),
-              expr("CAST(conv(substring(md5(concat('fh:', tok)), 1, 6), 16, " +
-                "10) AS BIGINT) % 64").as("b"),
-              expr("CASE WHEN CAST(conv(substring(md5(concat('sg:', tok)), 1," +
-                " 1), 16, 10) AS BIGINT) % 2 = 0 THEN CAST(1 AS BIGINT)" +
-                " ELSE CAST(-1 AS BIGINT) END").as("sg"))
-          val yd = docs(s, dir).select(col("doc_id"),
+        // Featurization: the label y is a deterministic per-doc function
+        // of the same split(text) the tokenizer explodes, so it rides the
+        // ONE exploded scan as a groupBy key instead of a second
+        // documents scan joined back (both xf branches consume the same
+        // (doc_id, y, b) exchange via ReuseExchange). Precondition: text
+        // is never NULL. explode(split(NULL)) yields no rows, so a
+        // NULL-text doc would get no features and no bias row and drop
+        // out of training and eval; an empty text still splits to [""],
+        // one token, so it keeps its bias row. The documents table has no
+        // NULL texts at any SF.
+        val base = docs(s, dir)
+          .select(col("doc_id"),
             expr("CAST(CASE WHEN size(filter(split(text, ' '), " +
               "w -> w IN ('spark', 'query', 'join'))) >= 3 " +
-              "THEN 1 ELSE -1 END AS BIGINT)").as("y"))
-          tf.groupBy("doc_id", "b").agg(sum(col("sg")).as("phi"))
-            .filter(col("phi") =!= 0)
-            .join(yd, "doc_id")
-            .unionByName(yd.select(col("doc_id"), lit(64L).as("b"),
+              "THEN 1 ELSE -1 END AS BIGINT)").as("y"),
+            explode(split(col("text"), " ")).as("tok"))
+          .select(col("doc_id"), col("y"),
+            expr("CAST(conv(substring(md5(concat('fh:', tok)), 1, 6), 16, " +
+              "10) AS BIGINT) % 64").as("b"),
+            expr("CASE WHEN CAST(conv(substring(md5(concat('sg:', tok)), 1," +
+              " 1), 16, 10) AS BIGINT) % 2 = 0 THEN CAST(1 AS BIGINT)" +
+              " ELSE CAST(-1 AS BIGINT) END").as("sg"))
+        val grouped = base.groupBy("doc_id", "y", "b")
+          .agg(sum(col("sg")).as("phi"))
+        val xf = grouped.filter(col("phi") =!= 0)
+          .select(col("doc_id"), col("b"), col("phi"), col("y"))
+          .unionByName(grouped.select("doc_id", "y").distinct()
+            .select(col("doc_id"), lit(64L).as("b"),
               lit(1L).as("phi"), col("y")))
-        }).barrier() // featurize once; every round + the eval re-reads it
+          .barrier() // featurize once; every round + the eval re-reads it
         val w0 = s.range(65).select(col("id").as("b"), lit(0L).as("w"))
         def step(w: DataFrame, round: Int): (DataFrame, DataFrame) = {
           val margins = xf.join(broadcast(w), Seq("b"))

@@ -301,19 +301,10 @@ object Warehouse {
       // function evaluated interpreted per row, allocating the sequence
       // array each time (guide §4: built-in expressions over closures in
       // the hot path). Same BIGINT, term order irrelevant to a sum.
-      // -Dgraft.zUnroll=off restores the lambda (A/B: tools.AbBench).
-      val zExpr =
-        if (sys.props.get("graft.zUnroll").contains("off"))
-          """aggregate(sequence(0, 7), CAST(0 AS BIGINT), (acc, j) ->
-            |  acc + shiftleft(shiftright(l_partkey_code, j) & 1, 2 * j)
-            |      + shiftleft(shiftright(l_suppkey_code, j) & 1, 2 * j + 1))"""
-            .stripMargin
-        else {
-          val zTerms = (0 to 7).flatMap(j => Seq(
-            s"shiftleft(shiftright(l_partkey_code, $j) & 1, ${2 * j})",
-            s"shiftleft(shiftright(l_suppkey_code, $j) & 1, ${2 * j + 1})"))
-          s"CAST(${zTerms.mkString(" + ")} AS BIGINT)"
-        }
+      val zTerms = (0 to 7).flatMap(j => Seq(
+        s"shiftleft(shiftright(l_partkey_code, $j) & 1, ${2 * j})",
+        s"shiftleft(shiftright(l_suppkey_code, $j) & 1, ${2 * j + 1})"))
+      val zExpr = s"CAST(${zTerms.mkString(" + ")} AS BIGINT)"
       li.join(cx, "l_partkey").join(cy, "l_suppkey")
         .select(col("l_partkey").as("x"), col("l_suppkey").as("y"),
           expr(zExpr).as("zval"))

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{Bench, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, GraftSession, SparkEntry, Tables}
 
 /** Scaling-exponent probe: the sf1 rehearsal shows the heavy tail is
   * sublinear at ONE 10× datapoint; this tool measures the exponent
@@ -123,16 +122,7 @@ object BenchScaling {
       12.0 -> "/root/repo/testdata-sf12")
     def sfsFor(name: String): Seq[(Double, String)] =
       sfs.take(farPoint.getOrElse(name, 3))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // the ONE fixed-shape calibration job every artifact stamps: sf0.1

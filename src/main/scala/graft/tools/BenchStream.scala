@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Bench, Tables}
+import graft.{Bench, GraftSession, Tables}
 import graft.streaming.Streams
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -233,15 +233,7 @@ object BenchStream {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val line = runAll(spark, sfDir, "/root/testdata/sf0.1", nBatches)
     java.nio.file.Files.writeString(

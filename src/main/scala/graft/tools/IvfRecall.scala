@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Quantifies the q357 two-level (IVF, nprobe=1) assignment
@@ -45,15 +44,7 @@ object IvfRecall {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.ensureRegistered(spark)
     def f3(v: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, v)

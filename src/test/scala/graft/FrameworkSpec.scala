@@ -113,6 +113,9 @@ class FrameworkSpec extends SparkSpec {
     assert(m.go(spark, ctx))
     assert(m.preRan && m.postRan)
     assert(m.stats("rows_in").value == 5)
+    // a re-run reports its own counters, not both runs' sum
+    assert(m.go(spark, ctx))
+    assert(m.stats("rows_in").value == 5)
     val lock = m.lock(ctx)
     assert(lock("build") == "r1")
     assert(lock("dataset.src").endsWith("region.parquet"))

@@ -167,4 +167,34 @@ class GraphSpec extends SparkSpec {
       .as[(String, String)].collect().sorted.toSeq
     assert(run(e.repartition(1)) == run(e.repartition(7, col("dst"))))
   }
+
+  // Sorted distinct arrays of size 0, 1, 2, 3 and 6; an array shorter than
+  // the tuple expands to nothing.
+  private val baskets = Seq(Seq.empty[Long], Seq(7L), Seq(2L, 9L), Seq(1L, 3L, 4L),
+    Seq(1L, 3L, 4L, 8L, 10L, 15L))
+
+  test("pairExplode emits every i < j pair once and carries the other columns") {
+    val in = baskets.zipWithIndex
+      .map { case (ps, i) => (i.toLong, s"k$i", ps) }.toDF("id", "tag", "ps")
+    val expected = baskets.zipWithIndex.flatMap { case (ps, i) =>
+      for (x <- ps.indices; y <- ps.indices if x < y)
+        yield (i.toLong, s"k$i", ps(x), ps(y))
+    }.sorted
+    for (spread <- Seq(false, true)) {
+      val out = operators.Graph.pairExplode(in, "ps", spread)
+      assert(out.columns.toSeq == Seq("id", "tag", "a", "b"))
+      val got = out.as[(Long, String, Long, Long)].collect().toSeq.sorted
+      assert(got == expected, s"spread=$spread")
+    }
+  }
+
+  test("tripleExplode (q287's triple build) emits every a < b < c triple once") {
+    val in = baskets.toDF("ps")
+    val expected = baskets.flatMap(ps =>
+      ps.combinations(3).map { case Seq(a, b, c) => (a, b, c) }).sorted
+    val out = operators.Graph.tripleExplode(in, "ps")
+    assert(out.columns.toSeq == Seq("a", "b", "c"))
+    assert(out.as[(Long, Long, Long)].collect().toSeq.sorted == expected)
+    assert(expected.size == 1 + 20)
+  }
 }

@@ -12,16 +12,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val session: SparkSession = GraftSession.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     // Force external sorters to spill every 100k rows so specs can cover
     // the spill-reader regime (reused row buffers) without huge inputs.
     // Context-level conf: it cannot be flipped per-test.

@@ -8,6 +8,16 @@
 #   tools/precommit.sh --verify all         # + oracle-check every query
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# One plan shape per rewrite and one session builder: no JVM-global
+# graft.* switch, and no SparkSession.builder() outside GraftSession.scala.
+if grep -rnE 'sys\.props[^"]*"graft\.|System\.getProperty\("graft\.' src/main/scala; then
+  echo "precommit: src/main/scala reads a graft.* JVM system property" >&2
+  exit 1
+fi
+if grep -rn 'SparkSession\.builder()' src/main/scala | grep -v '/GraftSession\.scala:'; then
+  echo "precommit: SparkSession.builder() outside GraftSession.scala" >&2
+  exit 1
+fi
 sbt -batch Test/compile
 if [[ "${1:-}" == "--test" ]]; then
   sbt -batch test
