@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ParquetStage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Table access for the driver-generated TPC-H-ish testdata (TESTDATA.md).
@@ -13,13 +14,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-(session, dir, table) memo of the ANALYZED read plan. A bare
-    * `spark.read.parquet` pays file listing + parquet footer/schema read +
-    * analysis on EVERY call — measured ~70 ms per call, ~0.2 s per bench
-    * query that loads 2–3 tables. Production engines amortize this through
-    * a catalog/metastore; this memo is the same thing for the fixed
-    * testdata layout. It caches PLAN METADATA only — every action still
-    * scans the parquet files — and the testdata dirs are immutable
+  /** Per-(session, dir, table) memo of the ANALYZED read plan. A load
+    * stages the table through [[graft.sources.ParquetStage]]: a file
+    * listing, one footer read on the driver and analysis, and no Spark
+    * job — about 25 ms per table in a fresh session on 4 cores, where
+    * Spark's own schema inference job made it 50–80 ms. The memo keeps
+    * even that off every later call: production engines amortize it
+    * through a catalog/metastore, and this memo is the same thing for the
+    * fixed testdata layout. It caches PLAN METADATA only — every action
+    * still scans the parquet files — and the testdata dirs are immutable
     * (TESTDATA.md), so a stale listing cannot occur.
     */
   private val planMemo =
@@ -41,7 +44,7 @@ object Tables {
 
   private def loadFresh(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir) else
-      spark.read.parquet(s"$dir/$name.parquet")
+      ParquetStage.read(spark, s"$dir/$name.parquet")
 
   /** Load with scan parallelism at least the cluster's. The testdata ships
     * one row-group per file, so the raw scan is a single task and every
@@ -62,29 +65,23 @@ object Tables {
 
   /** `events.ts` has shipped in two physical encodings across testdata
     * generations: TIMESTAMP(NANOS) (rejected by Spark's reader unless read
-    * as raw nanos via the legacy conf, then truncated to micros — the same
-    * conversion DuckDB applies) and plain TIMESTAMP(MICROS) (read as
-    * TIMESTAMP_NTZ). Normalize both to session-zone TimestampType — the
-    * session is pinned to UTC everywhere (GraftSession/Bench/Verify), so
-    * the NTZ→LTZ cast is value-preserving and downstream operators see one
-    * stable type regardless of which generation is on disk.
+    * as raw nanos, then truncated to micros — the same conversion DuckDB
+    * applies) and plain TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ).
+    * Normalize both to session-zone TimestampType — the session is pinned
+    * to UTC everywhere (GraftSession/Bench/Verify), so the NTZ→LTZ cast is
+    * value-preserving and downstream operators see one stable type
+    * regardless of which generation is on disk. Raw nanos come from
+    * staging's private conf copy: the session conf is shared with every
+    * concurrent read (ModelGraph runs models on threads) and is not set.
     */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      raw.schema("ts").dataType match {
-        case LongType      => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case TimestampType => raw
-        case _             => raw.withColumn("ts", col("ts").cast(TimestampType))
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    val raw = ParquetStage.read(spark, s"$dir/events.parquet", nanosAsLong = true)
+    raw.schema("ts").dataType match {
+      case LongType      => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampType => raw
+      case _             => raw.withColumn("ts", col("ts").cast(TimestampType))
     }
   }
 

@@ -2,6 +2,7 @@ package graft.examples
 
 import graft.core.Checkpoints._
 import graft.model._
+import graft.sources.ParquetStage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -817,7 +818,7 @@ object StreamingServing {
           concat_ws("|", col("hour").cast("string"), col("segment")))
         val base =
           if (graft.sources.DatasetFs.exists(spark, s"parquet://$servingPath"))
-            spark.read.parquet(servingPath)
+            ParquetStage.read(spark, servingPath)
           else changes.limit(0)
         // Rewrite via temp dir + atomic swap: the merge job reads the
         // current table and writes somewhere ELSE, so a lost cached block
@@ -880,7 +881,7 @@ object StreamingIngestDedup {
   def refresh(spark: SparkSession, docsDir: String, edgesPath: String,
       uniquePath: String, checkpointDir: String, minAgree: Int = 8): Unit = {
     import graft.api._
-    val schema = spark.read.parquet(docsDir).schema
+    val schema = ParquetStage.read(spark, docsDir).schema
     val verdicts = Streams.neardupVerifyStream(
       spark.readStream.schema(schema).parquet(docsDir)
         .select("doc_id", "text"))
@@ -898,7 +899,7 @@ object StreamingIngestDedup {
               col("id_b").cast("string")))
         val base =
           if (graft.sources.DatasetFs.exists(spark, s"parquet://$edgesPath"))
-            spark.read.parquet(edgesPath)
+            ParquetStage.read(spark, edgesPath)
           else changes.limit(0)
         val tmp = s"$edgesPath.tmp-$batchId"
         base.mergeUpsert(changes, "k").write.mode("overwrite").parquet(tmp)
@@ -909,10 +910,10 @@ object StreamingIngestDedup {
     q.awaitTermination()
     // decision joined back to the corpus: id_b of a confirmed edge = a
     // later arrival that near-duplicates an already-kept doc -> dropped
-    val corpus = spark.read.parquet(docsDir)
+    val corpus = ParquetStage.read(spark, docsDir)
     val drops =
       if (graft.sources.DatasetFs.exists(spark, s"parquet://$edgesPath"))
-        spark.read.parquet(edgesPath).select(col("id_b").as("doc_id"))
+        ParquetStage.read(spark, edgesPath).select(col("id_b").as("doc_id"))
       else corpus.select("doc_id").limit(0)
     val tmp = s"$uniquePath.tmp"
     corpus.join(drops.distinct(), Seq("doc_id"), "left_anti")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Query, Tables}
-import graft.sources.ConnectorRegistry
+import graft.sources.{ConnectorRegistry, ParquetStage}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -202,7 +202,7 @@ object Sources {
       c.filter(pmod(col("c_custkey"), lit(2)) === 1)
         .select("c_custkey", "c_acctbal")
         .write.mode("overwrite").parquet(s"$out/batch=2")
-      s.read.option("mergeSchema", "true").parquet(out)
+      ParquetStage.read(s, out, mergeSchema = true)
         .agg(count(lit(1)).as("n"),
           count(col("c_name")).as("with_name"),
           count(col("c_acctbal")).as("with_bal"),

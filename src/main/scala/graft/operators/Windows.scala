@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Query, Tables}
+import graft.sources.ParquetStage
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -119,7 +120,7 @@ object Windows {
       val out = s"/tmp/graft_rt_${dir.replaceAll("[^a-zA-Z0-9]", "_")}/cust_split"
       val c = Tables.load(s, dir, "customer")
       c.coalesce(1).write.mode("overwrite").partitionBy("c_mktsegment").parquet(out)
-      s.read.parquet(s"$out/*")
+      ParquetStage.read(s, s"$out/*")
         .withColumn("src_file", input_file_name())
         // partition dir name carries the segment: .../c_mktsegment=X/part-...
         .withColumn("segment",

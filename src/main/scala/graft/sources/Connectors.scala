@@ -152,7 +152,7 @@ final class JsonDocConnector extends Connector {
 final class ParquetConnector extends Connector {
   val schemes = Seq("parquet")
   def read(spark: SparkSession, url: EngineUrl): DataFrame =
-    spark.read.parquet(url.sparkPath)
+    ParquetStage.read(spark, url.sparkPath)
   override def write(df: DataFrame, url: EngineUrl): Unit = {
     val w = df.write.mode(SaveMode.Overwrite)
     url.option("partitionBy") match {

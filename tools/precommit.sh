@@ -18,6 +18,13 @@ if grep -rn 'SparkSession\.builder()' src/main/scala | grep -v '/GraftSession\.s
   echo "precommit: SparkSession.builder() outside GraftSession.scala" >&2
   exit 1
 fi
+# One way to read parquet: batch reads go through graft.sources.ParquetStage,
+# which stages a dataset from one driver-side footer read (no Spark job).
+if grep -rnE '\.read(\.[A-Za-z]+\([^)]*\))*\.(parquet\(|format\("parquet"\))' src/main/scala \
+    | grep -v '/sources/ParquetStage\.scala:'; then
+  echo "precommit: parquet read outside graft.sources.ParquetStage" >&2
+  exit 1
+fi
 sbt -batch Test/compile
 if [[ "${1:-}" == "--test" ]]; then
   sbt -batch test
