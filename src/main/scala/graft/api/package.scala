@@ -543,30 +543,36 @@ package object api {
 
     /** Gopher-style repetition signals per row (cf. q87): appends
       * `dup_token_frac` (1 − distinct/total tokens) and `top_bigram_frac`
-      * (share of bigram slots taken by the most frequent bigram). Token
-      * stats are map-side; only (id, bigram) pairs shuffle.
+      * (share of bigram slots taken by the most frequent bigram). Both are
+      * computed inside the row, with no shuffle: the top bigram's count is
+      * the longest run of equal elements in the row's sorted bigrams, found
+      * by one `aggregate` lambda. Each row gets its own signals; rows that
+      * share an id are not merged (q87 groups its bigrams by `doc_id`, so
+      * the two agree wherever ids are unique).
       */
-    def repetitionSignals(idCol: String, textCol: String): DataFrame = {
+    def repetitionSignals(textCol: String): DataFrame = {
       val sz = org.apache.spark.sql.functions.size _
-      val t = split(col(textCol), " ")
-      val bigrams = expr(
-        s"""IF(size(split($textCol, ' ')) < 2, array(),
-           |  transform(sequence(1, size(split($textCol, ' ')) - 1),
-           |    i -> concat(element_at(split($textCol, ' '), i), ' ',
-           |                element_at(split($textCol, ' '), i + 1))))""".stripMargin)
-      val top = df.select(col(idCol), explode(bigrams).as("__bg"))
-        .groupBy(idCol, "__bg").agg(count(lit(1)).as("__c"))
-        .groupBy(idCol).agg(max(col("__c")).as("__top"))
-      df.withColumn("__n", sz(t).cast("long"))
-        .withColumn("__d", sz(array_distinct(t)).cast("long"))
-        .join(top, Seq(idCol), "left")
+      // the token array materializes once per row: an inline split inside
+      // the lambda would re-tokenize per bigram
+      val topBigram = expr(
+        """aggregate(
+          |  array_sort(IF(size(__t) < 2, array(),
+          |    transform(sequence(1, size(__t) - 1),
+          |      i -> concat(element_at(__t, i), ' ', element_at(__t, i + 1))))),
+          |  named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'top', 0L),
+          |  (acc, b) -> named_struct('prev', b,
+          |    'run', IF(acc.prev = b, acc.run + 1, 1L),
+          |    'top', greatest(acc.top, IF(acc.prev = b, acc.run + 1, 1L))),
+          |  acc -> acc.top)""".stripMargin)
+      df.withColumn("__t", split(col(textCol), " "))
+        .withColumn("__n", sz(col("__t")).cast("long"))
+        .withColumn("__d", sz(array_distinct(col("__t"))).cast("long"))
         .withColumn("dup_token_frac",
           (col("__n") - col("__d")).cast("double") / col("__n"))
         .withColumn("top_bigram_frac",
-          when(col("__n") > 1,
-            coalesce(col("__top"), lit(0L)).cast("double") / (col("__n") - 1))
+          when(col("__n") > 1, topBigram.cast("double") / (col("__n") - 1))
             .otherwise(lit(0.0)))
-        .drop("__n", "__d", "__top")
+        .drop("__t", "__n", "__d")
     }
 
     /** Cross-corpus passage dedup stats per row (cf. q88): cuts `textCol`

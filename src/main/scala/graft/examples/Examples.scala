@@ -221,12 +221,13 @@ class SensorInputs(readingsUrl: () => String) extends Model {
   * team actually runs, expressed as three framework models over the
   * library's own operators (sample → clean/normalize → dedup →
   * quality-filter, then shard, then audit). Every stage is a declarative
-  * plan; the only driver-side values are the audit counters.
+  * plan; the only driver-side values are the audit counters, which the
+  * pre-check's count and the curated write itself observe.
   *
   * Scale shape: the sample/quality filters are map-side; exact dedup
-  * shuffles a 16-byte digest; repetition signals shuffle (id, bigram)
-  * pairs with map-side combine; the shard write is a hash-partitioned
-  * fan-out. Nothing collects documents on the driver.
+  * shuffles a 16-byte digest; repetition signals are per row, computed
+  * inside each document with no shuffle; the shard write is a
+  * hash-partitioned fan-out. Nothing collects documents on the driver.
   */
 class CurateCorpus(inUrl: String, outUrl: String,
     samplePct: Int = 100, maxTopBigramFrac: Double = 0.2) extends Model {
@@ -235,29 +236,30 @@ class CurateCorpus(inUrl: String, outUrl: String,
     "raw" -> Connect(inUrl, AccessMode.Read),
     "curated" -> Connect(outUrl, AccessMode.Write))
 
-  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean =
-    Checks.nonEmpty(io.read("raw"))
+  private var docsIn = 0L
+
+  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
+    docsIn = Checks.counted(io.read("raw"))
+    true
+  }
 
   def build(s: SparkSession, io: ModelIo): Unit = {
     import graft.api._
-    val raw = io.read("raw")
-    stat(s, "docs_in").add(raw.count())
-    val sampled = raw.hashSample("doc_id", samplePct)
+    val sampled = io.read("raw").hashSample("doc_id", samplePct)
     val normalized = sampled.withColumn("norm_text",
       regexp_replace(regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " "))
     val deduped = normalized.dedupExactBy("norm_text", "doc_id")
     val kept = deduped
-      .repetitionSignals("doc_id", "norm_text")
+      .repetitionSignals("norm_text")
       .filter(col("top_bigram_frac") <= maxTopBigramFrac)
       .drop("dup_token_frac", "top_bigram_frac")
-    stat(s, "docs_kept").add(kept.count())
-    io.write("curated", kept)
+    val n = io.writeCounted("curated")(_.observe(kept, "docs_kept" -> count(lit(1))))
+    stat(s, "docs_in").add(docsIn)
+    stat(s, "docs_kept").add(n("docs_kept"))
   }
 
-  override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
-    val out = io.readBack("curated")
-    Checks.unique(out, Seq("norm_text")) && Checks.noNulls(out, Seq("doc_id"))
-  }
+  override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean =
+    Checks.uniqueNoNulls(io.readBack("curated"), Seq("norm_text"), Seq("doc_id"))
 }
 
 /** Shard the curated corpus for training: deterministic 8-way hash shard
@@ -304,15 +306,20 @@ class MaintainDimension(baseUrl: String, changesUrl: String,
     "merged" -> Connect(outUrl, AccessMode.Write),
     "audit" -> Connect(auditUrl, AccessMode.Write))
 
-  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean =
-    Checks.unique(io.read("base"), Seq(keyCol)) &&
-      Checks.unique(io.read("changes"), Seq(keyCol))
+  private var changesIn = 0L
+
+  /** Both inputs keyed uniquely; the change set's check also counts it. */
+  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
+    Checks.unique(io.read("base"), Seq(keyCol))
+    changesIn = Checks.checkedCount(io.read("changes"), Seq(keyCol))
+    true
+  }
 
   def build(s: SparkSession, io: ModelIo): Unit = {
     import graft.api._
     val base = io.read("base")
     val changes = io.read("changes")
-    stat(s, "changes_in").add(changes.count())
+    stat(s, "changes_in").add(changesIn)
     val merged = base.mergeUpsert(changes, keyCol)
     io.write("merged", merged)
     io.write("audit",
@@ -350,11 +357,18 @@ class MaintainDimension(baseUrl: String, changesUrl: String,
 // Scale shape (the 100 TB story, per stage): near dedup shuffles 16-byte
 // digests and 8-byte minhash band keys, never text; candidate verification
 // touches only LSH-bucket collisions; CC is pointer-jumping with checkpointed
-// lineage (durable under graft.checkpoint.dir); quality gates are map-side
-// except one (doc_id, bigram) combine; decontamination broadcasts a bounded
-// probe set (Bounded.probe states the budget in the plan); the domain mix is
-// one rank window per language partition; the shard write is a
-// hash-partitioned fan-out. No stage collects documents on the driver.
+// lineage (durable under graft.checkpoint.dir); quality gates are map-side,
+// every signal computed inside its document's row; decontamination
+// broadcasts a bounded probe set (Bounded.probe states the budget in the
+// plan); the domain mix is one rank window per language partition; the
+// shard write is a hash-partitioned fan-out. No stage collects documents on
+// the driver.
+//
+// One pass per model: each model's counters are observed on the write that
+// does its work (ModelIo.writeCounted; the reference likewise counts
+// `self.stats` inside its single build loop, `model.py:88-90`), or kept from
+// a count its pre-check runs anyway, and each post-check is one aggregate
+// over the read-back. No model runs a separate count() of what it writes.
 // ============================================================================
 
 /** Stage 1: exact + near dedup, keeping one representative per duplicate
@@ -369,7 +383,8 @@ class MaintainDimension(baseUrl: String, changesUrl: String,
   * `minChars`. Complements [[NearDedupDocs]]: near-dedup drops whole
   * near-identical documents; this removes repeated PASSAGES inside
   * otherwise-distinct documents. Stats record docs/chars in and out so a
-  * run's reclaim is visible in the lock manifest.
+  * run's reclaim is visible in the lock manifest: the pre-check's
+  * aggregate counts what comes in, the write observes what goes out.
   */
 class SubstringDedupDocs(inUrl: String, outUrl: String,
     L: Int = 20, minChars: Int = 20) extends Model {
@@ -378,32 +393,36 @@ class SubstringDedupDocs(inUrl: String, outUrl: String,
     "raw" -> Connect(inUrl, AccessMode.Read),
     "passage_deduped" -> Connect(outUrl, AccessMode.Write))
 
-  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean =
-    Checks.nonEmpty(io.read("raw"))
+  private var docsIn, charsIn = 0L
+
+  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
+    val in = io.read("raw")
+      .agg(count(lit(1)), coalesce(sum(length(col("text"))), lit(0L))).first()
+    docsIn = in.getLong(0)
+    charsIn = in.getLong(1)
+    docsIn > 0 || { throw Checks.CheckFailure("dataset is empty") }
+  }
 
   def build(s: SparkSession, io: ModelIo): Unit = {
     import graft.api._
     val raw = io.read("raw")
-    stat(s, "docs_in").add(raw.count())
-    stat(s, "chars_in").add(
-      raw.agg(sum(length(col("text")))).first().getLong(0))
     val cleaned = raw.removeDuplicatedSpans(L = L)
       .where(length(col("cleaned")) >= minChars)
       .join(raw.drop("text", "n_chars"), Seq("doc_id"))
       .withColumn("n_chars", length(col("cleaned")).cast("long"))
       .withColumnRenamed("cleaned", "text")
-    io.write("passage_deduped", cleaned)
-    val back = io.readBack("passage_deduped")
-    stat(s, "docs_out").add(back.count())
-    stat(s, "chars_out").add(
-      back.agg(sum(length(col("text")))).first().getLong(0))
+    val out = io.writeCounted("passage_deduped")(_.observe(cleaned,
+      "docs_out" -> count(lit(1)),
+      "chars_out" -> coalesce(sum(length(col("text"))), lit(0L))))
+    stat(s, "docs_in").add(docsIn)
+    stat(s, "chars_in").add(charsIn)
+    stat(s, "docs_out").add(out("docs_out"))
+    stat(s, "chars_out").add(out("chars_out"))
   }
 
-  override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
-    val out = io.readBack("passage_deduped")
-    Checks.noNulls(out, Seq("doc_id", "text")) &&
-      Checks.unique(out, Seq("doc_id"))
-  }
+  override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean =
+    Checks.uniqueNoNulls(io.readBack("passage_deduped"), Seq("doc_id"),
+      Seq("doc_id", "text"))
 }
 
 /** Sequence packing as a pipeline stage: assign every document to a
@@ -411,7 +430,9 @@ class SubstringDedupDocs(inUrl: String, outUrl: String,
   * ([[graft.operators.Packing]], Krell et al. 2021 — histogram solve on
   * the driver, broadcast assignment join) and write the doc→window map
   * with per-doc token counts. Stats record window count and padding so a
-  * run's packing efficiency is visible in the lock manifest.
+  * run's packing efficiency is visible in the lock manifest; the write
+  * observes them (bin ids are dense, so the window count is the largest
+  * bin id plus one).
   */
 class PackTrainingWindows(inUrl: String, outUrl: String,
     capacity: Int = 256) extends Model {
@@ -420,8 +441,12 @@ class PackTrainingWindows(inUrl: String, outUrl: String,
     "docs" -> Connect(inUrl, AccessMode.Read),
     "packed" -> Connect(outUrl, AccessMode.Write))
 
-  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean =
-    Checks.nonEmpty(io.read("docs"))
+  private var docsIn = 0L
+
+  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
+    docsIn = Checks.counted(io.read("docs"))
+    true
+  }
 
   def build(s: SparkSession, io: ModelIo): Unit = {
     import graft.api._
@@ -429,15 +454,14 @@ class PackTrainingWindows(inUrl: String, outUrl: String,
       .select(col("doc_id"),
         least(size(split(col("text"), " ")), lit(capacity)).cast("int")
           .as("tok"))
-    stat(s, "docs_in").add(docs.count())
-    io.write("packed", docs.packSequences("tok", "doc_id", capacity))
-    val back = io.readBack("packed")
-    val agg = back
-      .agg(sum(col("tok")).as("t"), countDistinct(col("bin_id")).as("w"))
-      .first()
-    stat(s, "total_tokens").add(agg.getLong(0))
-    stat(s, "windows").add(agg.getLong(1))
-    stat(s, "padding_tokens").add(agg.getLong(1) * capacity - agg.getLong(0))
+    val n = io.writeCounted("packed")(_.observe(
+      docs.packSequences("tok", "doc_id", capacity),
+      "total_tokens" -> sum(col("tok")),
+      "windows" -> (max(col("bin_id")) + 1)))
+    stat(s, "docs_in").add(docsIn)
+    stat(s, "total_tokens").add(n("total_tokens"))
+    stat(s, "windows").add(n("windows"))
+    stat(s, "padding_tokens").add(n("windows") * capacity - n("total_tokens"))
   }
 
   override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
@@ -479,13 +503,17 @@ class TrainQualityClassifier(inUrl: String, outUrl: String,
       "w -> w IN ('spark', 'query', 'join'))) >= 3 THEN 1 ELSE 0 END " +
       "AS BIGINT)"
 
-  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean =
-    Checks.nonEmpty(io.read("docs"))
+  private var docsIn = 0L
+
+  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
+    docsIn = Checks.counted(io.read("docs"))
+    true
+  }
 
   def build(s: SparkSession, io: ModelIo): Unit = {
     import graft.operators.{Calibration, TextClassifier}
     val docs = io.read("docs")
-    stat(s, "docs_in").add(docs.count())
+    stat(s, "docs_in").add(docsIn)
     val labels = docs.select(col("doc_id"), expr(labelExpr).as("label"))
     val feats = TextClassifier.hashedFeatures(docs, "text", "doc_id")
     val w = TextClassifier.ipmFit(feats,
@@ -500,18 +528,18 @@ class TrainQualityClassifier(inUrl: String, outUrl: String,
     val applied = Calibration.applyTable(
       scored.withColumn("bucket", col("bucket") + driftBuckets),
       table, "bucket")
-    io.write("scored", applied.select("doc_id", "label", "margin",
-      "predicted", "bucket", "calibrated"))
-    val back = io.readBack("scored")
-    stat(s, "n_correct").add(
-      back.filter(col("predicted") === col("label") * 2 - 1).count())
-    stat(s, "n_pos").add(back.filter(col("label") === 1).count())
+    val n = io.writeCounted("scored")(_.observe(
+      applied.select("doc_id", "label", "margin", "predicted", "bucket",
+        "calibrated"),
+      "n_correct" -> count_if(col("predicted") === col("label") * 2 - 1),
+      "n_pos" -> count_if(col("label") === 1)))
+    stat(s, "n_correct").add(n("n_correct"))
+    stat(s, "n_pos").add(n("n_pos"))
   }
 
   override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
     val out = io.readBack("scored")
-    if (!Checks.unique(out, Seq("doc_id")) ||
-      !Checks.noNulls(out, Seq("doc_id", "calibrated"))) return false
+    Checks.uniqueNoNulls(out, Seq("doc_id"), Seq("doc_id", "calibrated"))
     val agg = out.agg(count(lit(1)).as("n"),
       sum(when(col("predicted") === col("label") * 2 - 1, 1L).otherwise(0L))
         .as("correct"),
@@ -539,15 +567,17 @@ class NearDedupDocs(inUrl: String, outUrl: String,
     "raw" -> Connect(inUrl, AccessMode.Read),
     "unique_docs" -> Connect(outUrl, AccessMode.Write))
 
-  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean =
-    Checks.nonEmpty(io.read("raw"))
+  private var nIn = 0L
+
+  /** Non-empty input; its row count is the build's `docs_in`. */
+  override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
+    nIn = Checks.counted(io.read("raw"))
+    true
+  }
 
   def build(s: SparkSession, io: ModelIo): Unit = {
     import graft.api._
-    val raw = io.read("raw")
-    val nIn = raw.count()
-    stat(s, "docs_in").add(nIn)
-    val norm = raw.withColumn("norm_text",
+    val norm = io.read("raw").withColumn("norm_text",
       regexp_replace(regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "),
         " +", " "))
     val exact = norm.dedupExactBy("norm_text", "doc_id")
@@ -598,20 +628,22 @@ class NearDedupDocs(inUrl: String, outUrl: String,
     val kept = exact.join(cc, exact("doc_id") === cc("id"))
       .filter(col("doc_id") === col("component"))
       .drop("id", "component")
-    val nKept = kept.count()
+    val nKept = io.writeCounted("unique_docs")(
+      _.observe(kept, "docs_kept" -> count(lit(1))))("docs_kept")
+    stat(s, "docs_in").add(nIn)
     stat(s, "docs_kept").add(nKept)
     stat(s, "dups_removed").add(nIn - nKept)
-    io.write("unique_docs", kept)
   }
 
   override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean =
-    Checks.unique(io.readBack("unique_docs"), Seq("norm_text")) &&
-      Checks.noNulls(io.readBack("unique_docs"), Seq("doc_id"))
+    Checks.uniqueNoNulls(io.readBack("unique_docs"), Seq("norm_text"), Seq("doc_id"))
 }
 
 /** Stage 2: Gopher-style quality gates — token-count window, duplicate-token
   * and top-bigram repetition caps. All signals are exact integers/ratios
-  * from one (doc_id, bigram) combine plus map-side arithmetic.
+  * computed inside each document's row: the whole stage is map-side. One
+  * observation on the gated frame, just before the filter, counts both
+  * what came in and what passed.
   */
 class QualityGateDocs(inUrl: String, outUrl: String,
     minTokens: Int = 15, maxTokens: Int = 100000,
@@ -624,18 +656,19 @@ class QualityGateDocs(inUrl: String, outUrl: String,
 
   def build(s: SparkSession, io: ModelIo): Unit = {
     import graft.api._
-    val in = io.read("docs")
-    val nIn = in.count()
-    val kept = in.repetitionSignals("doc_id", "norm_text")
-      .withColumn("__nt", size(split(col("norm_text"), " ")))
-      .filter(col("__nt").between(minTokens, maxTokens) &&
-        col("dup_token_frac") <= maxDupTokenFrac &&
-        col("top_bigram_frac") <= maxTopBigramFrac)
-      .drop("__nt", "dup_token_frac", "top_bigram_frac")
-    val nKept = kept.count()
-    stat(s, "docs_kept").add(nKept)
-    stat(s, "docs_rejected").add(nIn - nKept)
-    io.write("quality_docs", kept)
+    val gated = io.read("docs").repetitionSignals("norm_text")
+      .withColumn("__pass",
+        size(split(col("norm_text"), " ")).between(minTokens, maxTokens) &&
+          col("dup_token_frac") <= maxDupTokenFrac &&
+          col("top_bigram_frac") <= maxTopBigramFrac)
+    val n = io.writeCounted("quality_docs") { c =>
+      c.observe(gated,
+          "docs_in" -> count(lit(1)), "docs_kept" -> count_if(col("__pass")))
+        .filter(col("__pass"))
+        .drop("__pass", "dup_token_frac", "top_bigram_frac")
+    }
+    stat(s, "docs_kept").add(n("docs_kept"))
+    stat(s, "docs_rejected").add(n("docs_in") - n("docs_kept"))
   }
 
   override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean =
@@ -646,7 +679,14 @@ class QualityGateDocs(inUrl: String, outUrl: String,
   * >= minHits distinct word 3-grams with the held-out eval set. The probe
   * gram set rides a bounded broadcast (eval benchmarks do not grow with
   * corpus SF; `Bounded.probe` states the budget in the plan), so the
-  * corpus side is a map-side join + per-doc count.
+  * corpus side is a map-side join + per-doc count (a plain count: each
+  * document's grams are already distinct).
+  *
+  * The documents are joined to the contaminated ids with a LEFT join and
+  * the counters observed above it, before the filter that drops the hits.
+  * Observed under an anti-join instead, the input's counter would be lost
+  * when the input is empty: adaptive execution then replaces the join by
+  * an empty relation, observation included.
   */
 class DecontaminateDocs(inUrl: String, evalUrl: String, outUrl: String,
     minHits: Int = 2) extends Model {
@@ -669,20 +709,22 @@ class DecontaminateDocs(inUrl: String, evalUrl: String, outUrl: String,
 
   def build(s: SparkSession, io: ModelIo): Unit = {
     val in = io.read("docs")
-    val nIn = in.count()
     val probe = grams(io.read("eval_set"), "text")
       .select("gram").distinct()
     val contaminated = grams(in, "norm_text")
       .join(graft.operators.Bounded.probe(probe, 1 << 20), "gram")
       .groupBy("doc_id")
-      .agg(countDistinct(col("gram")).as("__hits"))
+      .agg(count(lit(1)).as("__hits"))
       .filter(col("__hits") >= minHits)
-      .select("doc_id")
-    val kept = in.join(contaminated, Seq("doc_id"), "left_anti")
-    val nKept = kept.count()
-    stat(s, "docs_kept").add(nKept)
-    stat(s, "docs_decontaminated").add(nIn - nKept)
-    io.write("clean_docs", kept)
+      .select(col("doc_id"), lit(true).as("__hit"))
+    val n = io.writeCounted("clean_docs") { c =>
+      c.observe(in.join(contaminated, Seq("doc_id"), "left"),
+          "docs_in" -> count(lit(1)), "docs_kept" -> count_if(col("__hit").isNull))
+        .filter(col("__hit").isNull)
+        .select(in.columns.map(col): _*)
+    }
+    stat(s, "docs_kept").add(n("docs_kept"))
+    stat(s, "docs_decontaminated").add(n("docs_in") - n("docs_kept"))
   }
 
   override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean =
@@ -692,9 +734,11 @@ class DecontaminateDocs(inUrl: String, evalUrl: String, outUrl: String,
 /** Stage 4: domain mix — cap each language's share with a deterministic
   * hash ranking (the same doc wins at any parallelism), so the corpus mix
   * matches the training recipe instead of the crawl's accidents. One rank
-  * window per language; at whale-language scale the window is two-phase
-  * (per-partition top-cap, then merge) via Spark's TakeOrdered-style
-  * partial aggregation on the filter, never a global sort.
+  * window per language partition, never a global sort. One observation
+  * on the ranked frame, just before the cap filter, counts both what came
+  * in and what was kept; it sits between the window and the filter, so
+  * Spark's per-partition top-cap pre-limit (a window group limit) does not
+  * apply and every document reaches the language shuffle.
   */
 class DomainMixDocs(inUrl: String, outUrl: String, capPerLang: Int)
   extends Model {
@@ -704,17 +748,17 @@ class DomainMixDocs(inUrl: String, outUrl: String, capPerLang: Int)
     "mixed_docs" -> Connect(outUrl, AccessMode.Write))
 
   def build(s: SparkSession, io: ModelIo): Unit = {
-    val in = io.read("docs")
-    val nIn = in.count()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang")
       .orderBy(md5(concat(lit("mix:"), col("doc_id"))), col("doc_id"))
-    val kept = in.withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= capPerLang).drop("__rk")
-    val nKept = kept.count()
-    stat(s, "docs_kept").add(nKept)
-    stat(s, "docs_capped_out").add(nIn - nKept)
-    io.write("mixed_docs", kept)
+    val ranked = io.read("docs").withColumn("__rk", row_number().over(w))
+    val n = io.writeCounted("mixed_docs") { c =>
+      c.observe(ranked,
+          "docs_in" -> count(lit(1)), "docs_kept" -> count_if(col("__rk") <= capPerLang))
+        .filter(col("__rk") <= capPerLang).drop("__rk")
+    }
+    stat(s, "docs_kept").add(n("docs_kept"))
+    stat(s, "docs_capped_out").add(n("docs_in") - n("docs_kept"))
   }
 
   override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean = {

@@ -134,5 +134,18 @@ final class ModelIo(spark: SparkSession, model: Model, ctx: RunContext) {
     ConnectorRegistry.forScheme(url.scheme).write(df, url)
   }
 
+  /** Writes the frame `plan` builds, with the counters it attached
+    * through [[Checks.Counters.observe]] collected by that same write, and
+    * returns them by name: a model's counts without another pass over its
+    * data (the reference counts `self.stats` inside its one build loop,
+    * `model.py:88-90`).
+    */
+  def writeCounted(datasetName: String)(plan: Checks.Counters => DataFrame)
+      : Map[String, Long] = {
+    val counters = new Checks.Counters
+    write(datasetName, plan(counters))
+    counters.values()
+  }
+
   def resolvedUrl(datasetName: String): String = bound(datasetName)._1.toString
 }

@@ -212,7 +212,7 @@ class ApiSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, "ha ha ha ha"), (2L, "all words differ here"))
       .toDF("id", "text")
-    val out = df.repetitionSignals("id", "text")
+    val out = df.repetitionSignals("text")
       .select("id", "dup_token_frac", "top_bigram_frac")
       .as[(Long, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(out(1L) == (0.75, 1.0))

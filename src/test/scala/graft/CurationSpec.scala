@@ -28,6 +28,38 @@ class CurationSpec extends SparkSpec {
     assert(out(3L) == (0.0, 0.0))    // guard: no bigram slots
   }
 
+  test("repetitionSignals equals q87 on every sf0.01 document and on edge docs") {
+    import graft.api._
+    import spark.implicits._
+    // q87 keeps its (doc_id, bigram) shuffle; the extension counts the top
+    // bigram inside the row. Both fractions must agree exactly, NULLs too.
+    def both(dir: String) = {
+      val viaRow = Tables.load(spark, dir, "documents").repetitionSignals("text")
+        .select("doc_id", "dup_token_frac", "top_bigram_frac").collect()
+        .map(r => r.getLong(0) -> ((r.get(1), r.get(2)))).toMap
+      val viaQ87 = TextAnalysis.q87.run(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.get(2), r.get(3)))).toMap
+      (viaRow, viaQ87)
+    }
+    val (row, q87) = both(sf001)
+    assert(row.size == Tables.load(spark, sf001, "documents").count())
+    assert(row == q87)
+    val tmp = java.nio.file.Files.createTempDirectory("repsig").toString
+    Seq[(Long, String)](
+      (1L, ""),                      // no words: one empty token
+      (2L, "solo"),                  // one token: no bigram slots
+      (3L, "ha ha ha ha"),           // one bigram, repeated in every slot
+      (4L, "a b a b a b"),           // two bigrams interleaved, 3 and 2
+      (5L, null),                    // NULL text
+      (6L, "x y  x y"))              // an empty token between words
+      .toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+    val (edgeRow, edgeQ87) = both(tmp)
+    assert(edgeRow.size == 6)
+    assert(edgeRow == edgeQ87)
+    assert(edgeRow(3L) == ((0.75, 1.0)))
+    assert(edgeRow(4L) == ((4.0 / 6, 3.0 / 5)))
+  }
+
   test("q88 passage dedup: shared passages found across docs, not within") {
     import spark.implicits._
     val shared = (1 to 32).map(i => s"tok$i").mkString(" ")

@@ -352,6 +352,60 @@ class ExamplesSpec extends SparkSpec {
     assert(stats2 == stats)
   }
 
+  test("flagship models run one pass each: actions per go within budget") {
+    import org.apache.spark.sql.functions._
+    val work = tmp()
+    Tables.load(spark, sf001, "documents").filter(col("doc_id") < 10)
+      .select("doc_id", "text").write.parquet(s"$work/eval")
+    // (model, most Spark actions its go may run): each write, which also
+    // fills the model's counters, and one action per pre/post check.
+    // NearDedupDocs adds the candidate barrier and connected components'
+    // edge barrier and count; DecontaminateDocs adds Bounded.probe's cap
+    // guard.
+    val models = Seq(
+      new NearDedupDocs(s"parquet://$sf001/documents.parquet",
+        s"parquet://$work/deduped") -> 6,
+      new QualityGateDocs(s"parquet://$work/deduped",
+        s"parquet://$work/unique") -> 2,
+      new DecontaminateDocs(s"parquet://$work/unique", s"parquet://$work/eval",
+        s"parquet://$work/clean") -> 3,
+      new DomainMixDocs(s"parquet://$work/clean", s"parquet://$work/mixed",
+        900) -> 2,
+      new ShardCorpus(s"parquet://$work/mixed",
+        s"parquet://$work/sharded;partitionBy=shard",
+        s"parquet://$work/manifest") -> 3)
+    val ran = models.map { case (m, budget) =>
+      var ok = false
+      val n = FrameworkSpec.actionsDuring(spark) { ok = m.go(spark) }
+      assert(ok, s"${m.name} failed its checks")
+      (m.name, n, budget)
+    }
+    ran.foreach { case (name, n, budget) =>
+      assert(n <= budget, s"$name ran $n actions, budget $budget: $ran")
+    }
+    // counters still add up stage to stage
+    def st(m: Int, k: String) = models(m)._1.stats(k).value.longValue
+    assert(st(0, "docs_in") == 500L)
+    assert(st(1, "docs_kept") + st(1, "docs_rejected") == st(0, "docs_kept"))
+    assert(st(2, "docs_kept") + st(2, "docs_decontaminated") == st(1, "docs_kept"))
+    assert(st(3, "docs_kept") + st(3, "docs_capped_out") == st(2, "docs_kept"))
+  }
+
+  test("DecontaminateDocs on an empty input counts 0 kept and 0 removed") {
+    import org.apache.spark.sql.functions._
+    val work = tmp()
+    val docs = Tables.load(spark, sf001, "documents")
+      .withColumn("norm_text", lower(col("text")))
+    docs.limit(0).write.parquet(s"$work/unique")
+    docs.filter(col("doc_id") < 10).select("doc_id", "text")
+      .write.parquet(s"$work/eval")
+    val m = new DecontaminateDocs(s"parquet://$work/unique",
+      s"parquet://$work/eval", s"parquet://$work/clean")
+    assert(m.go(spark))
+    assert(m.stats("docs_kept").value == 0L)
+    assert(m.stats("docs_decontaminated").value == 0L)
+  }
+
   test("streaming serving pipeline: stream == batch, incremental across drops") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

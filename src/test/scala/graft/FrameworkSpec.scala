@@ -244,6 +244,85 @@ class FrameworkSpec extends SparkSpec {
     assert(Checks.noViolations(df, col("id") > 100, "range"))
   }
 
+  /** A write-only model binding `out` to `url`, for ModelIo.writeCounted. */
+  private def sinkIo(url: String): ModelIo = {
+    val m = new Model {
+      val connects = Map("out" -> Connect(url, AccessMode.Write))
+      def build(s: SparkSession, io: ModelIo): Unit = ()
+    }
+    new ModelIo(spark, m, RunContext())
+  }
+
+  test("observed counters: an empty input and an all-dropping filter count 0") {
+    import org.apache.spark.sql.functions._
+    val io = sinkIo(s"parquet://${tmpDir()}/out")
+    val empty = spark.range(10).toDF("id").filter(col("id") < 0)
+    assert(io.writeCounted("out")(_.observe(empty, "n" -> count(lit(1)))) ==
+      Map("n" -> 0L))
+    val n = io.writeCounted("out") { c =>
+      c.observe(spark.range(10).toDF("id"), "in" -> count(lit(1)),
+        "kept" -> count_if(col("id") > 100)).filter(col("id") > 100)
+    }
+    assert(n == Map("in" -> 10L, "kept" -> 0L))
+  }
+
+  test("observed counters: a partitioned write observes every row once") {
+    import org.apache.spark.sql.functions._
+    val dir = tmpDir()
+    val io = sinkIo(s"parquet://$dir/out;partitionBy=p")
+    val df = spark.range(1000).toDF("id").withColumn("p", col("id") % 7)
+    val n = io.writeCounted("out")(_.observe(df,
+      "rows" -> count(lit(1)), "p0" -> count_if(col("p") === 0)))
+    assert(n == Map("rows" -> 1000L, "p0" -> 143L))
+    assert(spark.read.parquet(s"$dir/out").count() == 1000L)
+  }
+
+  test("observed counters: a counter pruned with an empty join side raises") {
+    import org.apache.spark.sql.functions._
+    val io = sinkIo(s"parquet://${tmpDir()}/out")
+    // empty only at run time, so adaptive execution (not the optimizer)
+    // replaces the join, and the observed side with it
+    val none = spark.range(100).toDF("id").filter(col("id") < 0)
+    val e = intercept[Checks.CheckFailure] {
+      io.writeCounted("out") { c =>
+        c.observe(spark.range(100).toDF("id"), "left_rows" -> count(lit(1)))
+          .join(none, "id")
+      }
+    }
+    assert(e.getMessage.contains("counter left_rows was not observed"))
+  }
+
+  test("fused checks raise the single checks' messages, one action each") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def msg(f: => Boolean): String = intercept[Checks.CheckFailure](f).getMessage
+    val ok = Seq[(java.lang.Long, String)]((1L, "a"), (2L, "b")).toDF("k", "v")
+    assert(Checks.uniqueNoNulls(ok, Seq("k"), Seq("k", "v")))
+    assert(Checks.checkedCount(ok, Seq("k"), Seq("v")) == 2L)
+    assert(Checks.checkedCount(ok.filter(col("k") < 0), Seq("k")) == 0L)
+    val dup = Seq[(java.lang.Long, String)]((1L, "a"), (1L, "b")).toDF("k", "v")
+    assert(msg(Checks.uniqueNoNulls(dup, Seq("k"), Seq("k", "v"))) ==
+      msg(Checks.unique(dup, Seq("k"))))
+    assert(msg(Checks.unique(dup, Seq("k"))) == "duplicate keys on (k)")
+    val nullKey = Seq[(java.lang.Long, String)]((null, "a"), (2L, "b")).toDF("k", "v")
+    assert(msg(Checks.uniqueNoNulls(nullKey, Seq("k"), Seq("k", "v"))) ==
+      msg(Checks.noNulls(nullKey, Seq("k", "v"))))
+    assert(msg(Checks.noNulls(nullKey, Seq("k", "v"))) == "nulls in k")
+    val nullCol = Seq[(java.lang.Long, String)]((1L, "a"), (2L, null)).toDF("k", "v")
+    assert(msg(Checks.uniqueNoNulls(nullCol, Seq("k"), Seq("k", "v"))) ==
+      msg(Checks.noNulls(nullCol, Seq("k", "v"))))
+    assert(msg(Checks.noNulls(nullCol, Seq("k", "v"))) == "nulls in v")
+    assert(msg(Checks.conserved(ok, ok, count(lit(1)), sum(col("k")))) ==
+      "conservation violated: 2 != 3")
+    // each check is one action
+    assert(FrameworkSpec.actionsDuring(spark)(
+      Checks.uniqueNoNulls(ok, Seq("k"), Seq("k", "v"))) == 1)
+    assert(FrameworkSpec.actionsDuring(spark)(
+      Checks.conserved(ok, ok, count(lit(1)), count(lit(1)))) == 1)
+    assert(FrameworkSpec.actionsDuring(spark)(
+      Checks.noNulls(ok, Seq("k", "v"))) == 1)
+  }
+
   test("lazy context vars bind at resolution; lock doc pins the value") {
     var calls = 0
     val ctx = graft.core.RunContext()
@@ -440,5 +519,40 @@ class FrameworkSpec extends SparkSpec {
       assert(written.exists(_.getName.startsWith("part-")),
         s"expected checkpoint part files under $dir, found: $written")
     } finally spark.conf.unset(graft.core.Checkpoints.DirKey)
+  }
+}
+
+object FrameworkSpec {
+  import org.apache.spark.sql.execution.QueryExecution
+  import org.apache.spark.sql.util.QueryExecutionListener
+
+  /** Spark actions (successful or failed) that `f` runs: those whose
+    * analysis started after `f` did. Listener events arrive
+    * asynchronously and Spark has no public call that drains them, so this
+    * waits until no event has arrived for a quarter second.
+    */
+  def actionsDuring(spark: SparkSession)(f: => Any): Int = {
+    val since = System.currentTimeMillis()
+    val events, actions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      private def seen(qe: QueryExecution): Unit = {
+        events.incrementAndGet()
+        if (qe.tracker.phases.get("analysis").exists(_.startTimeMs >= since))
+          actions.incrementAndGet()
+      }
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = seen(qe)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      var last = -1; var still = 0
+      while (still < 5) {
+        Thread.sleep(50)
+        val now = events.get
+        if (now == last) still += 1 else { still = 0; last = now }
+      }
+    } finally spark.listenerManager.unregister(listener)
+    actions.get
   }
 }

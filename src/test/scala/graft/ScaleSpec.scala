@@ -106,7 +106,7 @@ class ScaleSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val docs = spark.read.format("graft-synth")
       .option("rows", 200000).option("partitions", 16).load()
-    val rep = docs.repetitionSignals("doc_id", "text")
+    val rep = docs.repetitionSignals("text")
       .agg(count(lit(1)).as("n"),
         min(col("dup_token_frac")), max(col("dup_token_frac")),
         min(col("top_bigram_frac")), max(col("top_bigram_frac")))

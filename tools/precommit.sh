@@ -4,6 +4,7 @@
 # script makes that impossible to repeat. Usage:
 #   tools/precommit.sh                      # Test/compile only (fast path)
 #   tools/precommit.sh --test               # full sbt test as well
+#   tools/precommit.sh --models             # + the model/framework/curation specs
 #   tools/precommit.sh --verify q346,q350   # + oracle-check named queries
 #   tools/precommit.sh --verify all         # + oracle-check every query
 set -euo pipefail
@@ -28,6 +29,11 @@ fi
 sbt -batch Test/compile
 if [[ "${1:-}" == "--test" ]]; then
   sbt -batch test
+fi
+if [[ "${1:-}" == "--models" ]]; then
+  # quick gate for changes to graft.model, graft.examples and the curation
+  # operators: lifecycle, counters, golden DAG counts, per-model action budgets
+  sbt -batch "testOnly graft.ExamplesSpec graft.FrameworkSpec graft.CurationSpec"
 fi
 if [[ "${1:-}" == "--verify" ]]; then
   queries="${2:-all}"
