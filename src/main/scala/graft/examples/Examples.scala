@@ -1,6 +1,5 @@
 package graft.examples
 
-import graft.core.Checkpoints._
 import graft.model._
 import graft.sources.ParquetStage
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -226,7 +225,8 @@ class SensorInputs(readingsUrl: () => String) extends Model {
   *
   * Scale shape: the sample/quality filters are map-side; exact dedup
   * shuffles a 16-byte digest; repetition signals are per row, computed
-  * inside each document with no shuffle; the shard write is a
+  * inside each document with no shuffle (two rows with the same id each
+  * keep their own signals, never merged); the shard write is a
   * hash-partitioned fan-out. Nothing collects documents on the driver.
   */
 class CurateCorpus(inUrl: String, outUrl: String,
@@ -236,10 +236,8 @@ class CurateCorpus(inUrl: String, outUrl: String,
     "raw" -> Connect(inUrl, AccessMode.Read),
     "curated" -> Connect(outUrl, AccessMode.Write))
 
-  private var docsIn = 0L
-
   override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
-    docsIn = Checks.counted(io.read("raw"))
+    stat(s, "docs_in").add(Checks.counted(io.read("raw")))
     true
   }
 
@@ -254,7 +252,6 @@ class CurateCorpus(inUrl: String, outUrl: String,
       .filter(col("top_bigram_frac") <= maxTopBigramFrac)
       .drop("dup_token_frac", "top_bigram_frac")
     val n = io.writeCounted("curated")(_.observe(kept, "docs_kept" -> count(lit(1))))
-    stat(s, "docs_in").add(docsIn)
     stat(s, "docs_kept").add(n("docs_kept"))
   }
 
@@ -306,12 +303,10 @@ class MaintainDimension(baseUrl: String, changesUrl: String,
     "merged" -> Connect(outUrl, AccessMode.Write),
     "audit" -> Connect(auditUrl, AccessMode.Write))
 
-  private var changesIn = 0L
-
   /** Both inputs keyed uniquely; the change set's check also counts it. */
   override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
     Checks.unique(io.read("base"), Seq(keyCol))
-    changesIn = Checks.checkedCount(io.read("changes"), Seq(keyCol))
+    stat(s, "changes_in").add(Checks.checkedCount(io.read("changes"), Seq(keyCol)))
     true
   }
 
@@ -319,7 +314,6 @@ class MaintainDimension(baseUrl: String, changesUrl: String,
     import graft.api._
     val base = io.read("base")
     val changes = io.read("changes")
-    stat(s, "changes_in").add(changesIn)
     val merged = base.mergeUpsert(changes, keyCol)
     io.write("merged", merged)
     io.write("audit",
@@ -359,8 +353,8 @@ class MaintainDimension(baseUrl: String, changesUrl: String,
 // touches only LSH-bucket collisions; CC is pointer-jumping with checkpointed
 // lineage (durable under graft.checkpoint.dir); quality gates are map-side,
 // every signal computed inside its document's row; decontamination
-// broadcasts a bounded probe set (Bounded.probe states the budget in the
-// plan); the domain mix is one rank window per language partition; the
+// joins the eval probe gram set, which the planner broadcasts while it is
+// small; the domain mix is one rank window per language partition; the
 // shard write is a hash-partitioned fan-out. No stage collects documents on
 // the driver.
 //
@@ -393,14 +387,12 @@ class SubstringDedupDocs(inUrl: String, outUrl: String,
     "raw" -> Connect(inUrl, AccessMode.Read),
     "passage_deduped" -> Connect(outUrl, AccessMode.Write))
 
-  private var docsIn, charsIn = 0L
-
   override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
     val in = io.read("raw")
       .agg(count(lit(1)), coalesce(sum(length(col("text"))), lit(0L))).first()
-    docsIn = in.getLong(0)
-    charsIn = in.getLong(1)
-    docsIn > 0 || { throw Checks.CheckFailure("dataset is empty") }
+    stat(s, "docs_in").add(in.getLong(0))
+    stat(s, "chars_in").add(in.getLong(1))
+    in.getLong(0) > 0 || { throw Checks.CheckFailure("dataset is empty") }
   }
 
   def build(s: SparkSession, io: ModelIo): Unit = {
@@ -414,8 +406,6 @@ class SubstringDedupDocs(inUrl: String, outUrl: String,
     val out = io.writeCounted("passage_deduped")(_.observe(cleaned,
       "docs_out" -> count(lit(1)),
       "chars_out" -> coalesce(sum(length(col("text"))), lit(0L))))
-    stat(s, "docs_in").add(docsIn)
-    stat(s, "chars_in").add(charsIn)
     stat(s, "docs_out").add(out("docs_out"))
     stat(s, "chars_out").add(out("chars_out"))
   }
@@ -441,10 +431,8 @@ class PackTrainingWindows(inUrl: String, outUrl: String,
     "docs" -> Connect(inUrl, AccessMode.Read),
     "packed" -> Connect(outUrl, AccessMode.Write))
 
-  private var docsIn = 0L
-
   override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
-    docsIn = Checks.counted(io.read("docs"))
+    stat(s, "docs_in").add(Checks.counted(io.read("docs")))
     true
   }
 
@@ -458,7 +446,6 @@ class PackTrainingWindows(inUrl: String, outUrl: String,
       docs.packSequences("tok", "doc_id", capacity),
       "total_tokens" -> sum(col("tok")),
       "windows" -> (max(col("bin_id")) + 1)))
-    stat(s, "docs_in").add(docsIn)
     stat(s, "total_tokens").add(n("total_tokens"))
     stat(s, "windows").add(n("windows"))
     stat(s, "padding_tokens").add(n("windows") * capacity - n("total_tokens"))
@@ -503,17 +490,14 @@ class TrainQualityClassifier(inUrl: String, outUrl: String,
       "w -> w IN ('spark', 'query', 'join'))) >= 3 THEN 1 ELSE 0 END " +
       "AS BIGINT)"
 
-  private var docsIn = 0L
-
   override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
-    docsIn = Checks.counted(io.read("docs"))
+    stat(s, "docs_in").add(Checks.counted(io.read("docs")))
     true
   }
 
   def build(s: SparkSession, io: ModelIo): Unit = {
     import graft.operators.{Calibration, TextClassifier}
     val docs = io.read("docs")
-    stat(s, "docs_in").add(docsIn)
     val labels = docs.select(col("doc_id"), expr(labelExpr).as("label"))
     val feats = TextClassifier.hashedFeatures(docs, "text", "doc_id")
     val w = TextClassifier.ipmFit(feats,
@@ -540,21 +524,20 @@ class TrainQualityClassifier(inUrl: String, outUrl: String,
   override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
     val out = io.readBack("scored")
     Checks.uniqueNoNulls(out, Seq("doc_id"), Seq("doc_id", "calibrated"))
-    val agg = out.agg(count(lit(1)).as("n"),
-      sum(when(col("predicted") === col("label") * 2 - 1, 1L).otherwise(0L))
-        .as("correct"),
-      sum(col("label")).as("pos")).first()
+    // accuracy and expected calibration error in one grouped aggregate:
+    // per fitted probability its population, positives and correct
+    // predictions; ECE weighs |empirical rate − calibrated| by population
+    val agg = out.groupBy("calibrated")
+      .agg(count(lit(1)).as("nb"), sum(col("label")).as("yb"),
+        count_if(col("predicted") === col("label") * 2 - 1).as("cb"))
+      .agg(sum(col("nb")), sum(col("cb")), sum(col("yb")),
+        sum(abs(col("yb").cast("double") / col("nb").cast("double") -
+          col("calibrated")) * col("nb").cast("double")))
+      .first()
     val (n, correct, pos) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
     val accuracy = correct.toDouble / n
     val baseline = math.max(pos, n - pos).toDouble / n
-    // expected calibration error, computed distributively: per fitted
-    // probability, |empirical rate − calibrated| weighted by population
-    val ece = out.groupBy("calibrated")
-      .agg(count(lit(1)).as("nb"), sum(col("label")).as("yb"))
-      .agg(sum(abs(col("yb").cast("double") / col("nb").cast("double") -
-        col("calibrated")) * col("nb").cast("double")).as("werr"),
-        sum(col("nb")).as("tot"))
-      .select(col("werr") / col("tot").cast("double")).first().getDouble(0)
+    val ece = agg.getDouble(3) / n.toDouble
     accuracy > baseline && ece <= maxEce
   }
 }
@@ -567,11 +550,12 @@ class NearDedupDocs(inUrl: String, outUrl: String,
     "raw" -> Connect(inUrl, AccessMode.Read),
     "unique_docs" -> Connect(outUrl, AccessMode.Write))
 
-  private var nIn = 0L
+  private var docsIn = 0L
 
-  /** Non-empty input; its row count is the build's `docs_in`. */
+  /** Non-empty input; its row count is `docs_in`, which the build needs. */
   override def preBuildCheck(s: SparkSession, io: ModelIo): Boolean = {
-    nIn = Checks.counted(io.read("raw"))
+    docsIn = Checks.counted(io.read("raw"))
+    stat(s, "docs_in").add(docsIn)
     true
   }
 
@@ -608,14 +592,16 @@ class NearDedupDocs(inUrl: String, outUrl: String,
           .stripMargin)))
       .select(col("doc_id"), col("__band.b").as("b"), col("__band.k").as("k"),
         col("__sh"))
-      .barrier() // both sides of the candidate self-join
-    // LSH candidates -> exact Jaccard verification -> duplicate edges.
-    val cand = withBands.select(col("b"), col("k"), col("doc_id").as("a"),
-        col("__sh").as("sa"))
-      .join(withBands.select(col("b"), col("k"), col("doc_id").as("bid"),
-        col("__sh").as("sb")), Seq("b", "k"))
-      .filter(col("a") < col("bid"))
-      .select(col("a"), col("bid").as("b2"), col("sa"), col("sb"))
+    // LSH candidates -> exact Jaccard verification -> duplicate edges. The
+    // two sides of the self-join are one plan behind one shuffle join, so
+    // Spark shuffles the band table once and reuses that exchange on the
+    // other side: every signature is computed once.
+    val (l, r) = (withBands.as("l"), withBands.as("r"))
+    val cand = l.hint("shuffle_hash")
+      .join(r, col("l.b") === col("r.b") && col("l.k") === col("r.k"))
+      .filter(col("l.doc_id") < col("r.doc_id"))
+      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b2"),
+        col("l.__sh").as("sa"), col("r.__sh").as("sb"))
       .dropDuplicates("a", "b2")
     val edges = cand
       .withColumn("__i", size(array_intersect(col("sa"), col("sb"))).cast("double"))
@@ -630,9 +616,8 @@ class NearDedupDocs(inUrl: String, outUrl: String,
       .drop("id", "component")
     val nKept = io.writeCounted("unique_docs")(
       _.observe(kept, "docs_kept" -> count(lit(1))))("docs_kept")
-    stat(s, "docs_in").add(nIn)
     stat(s, "docs_kept").add(nKept)
-    stat(s, "dups_removed").add(nIn - nKept)
+    stat(s, "dups_removed").add(docsIn - nKept)
   }
 
   override def postBuildCheck(s: SparkSession, io: ModelIo): Boolean =
@@ -677,10 +662,12 @@ class QualityGateDocs(inUrl: String, outUrl: String,
 
 /** Stage 3: benchmark decontamination — drop any document sharing
   * >= minHits distinct word 3-grams with the held-out eval set. The probe
-  * gram set rides a bounded broadcast (eval benchmarks do not grow with
-  * corpus SF; `Bounded.probe` states the budget in the plan), so the
-  * corpus side is a map-side join + per-doc count (a plain count: each
-  * document's grams are already distinct).
+  * gram set is a plain join side: eval benchmarks do not grow with corpus
+  * SF, so the planner broadcasts it and the corpus side is a map-side
+  * join + per-doc count (a plain count: each document's grams are already
+  * distinct). No hint forces the broadcast, so no cap has to be counted
+  * before the write: a probe set too big to broadcast is shuffle-joined,
+  * never truncated.
   *
   * The documents are joined to the contaminated ids with a LEFT join and
   * the counters observed above it, before the filter that drops the hits.
@@ -712,7 +699,7 @@ class DecontaminateDocs(inUrl: String, evalUrl: String, outUrl: String,
     val probe = grams(io.read("eval_set"), "text")
       .select("gram").distinct()
     val contaminated = grams(in, "norm_text")
-      .join(graft.operators.Bounded.probe(probe, 1 << 20), "gram")
+      .join(probe, "gram")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("__hits"))
       .filter(col("__hits") >= minHits)

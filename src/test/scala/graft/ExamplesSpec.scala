@@ -359,16 +359,14 @@ class ExamplesSpec extends SparkSpec {
       .select("doc_id", "text").write.parquet(s"$work/eval")
     // (model, most Spark actions its go may run): each write, which also
     // fills the model's counters, and one action per pre/post check.
-    // NearDedupDocs adds the candidate barrier and connected components'
-    // edge barrier and count; DecontaminateDocs adds Bounded.probe's cap
-    // guard.
+    // NearDedupDocs adds connected components' edge barrier and count.
     val models = Seq(
       new NearDedupDocs(s"parquet://$sf001/documents.parquet",
-        s"parquet://$work/deduped") -> 6,
+        s"parquet://$work/deduped") -> 5,
       new QualityGateDocs(s"parquet://$work/deduped",
         s"parquet://$work/unique") -> 2,
       new DecontaminateDocs(s"parquet://$work/unique", s"parquet://$work/eval",
-        s"parquet://$work/clean") -> 3,
+        s"parquet://$work/clean") -> 2,
       new DomainMixDocs(s"parquet://$work/clean", s"parquet://$work/mixed",
         900) -> 2,
       new ShardCorpus(s"parquet://$work/mixed",
